@@ -2,8 +2,8 @@
 untraced and traced, must pass its output check and print every metric
 BENCHMARK.json names, with its unit.
 
-    python3 perfbench/smoke.py            # all workloads
-    python3 perfbench/smoke.py dedup_clusters
+    python3 perfbench/smoke.py            # the workloads of BENCHMARK.json
+    python3 perfbench/smoke.py corpus_prep_dedup
 
 Takes several minutes: each run starts its own Spark session.
 """
@@ -18,12 +18,13 @@ import sys
 HERE = os.path.dirname(os.path.abspath(__file__))
 ROOT = os.path.dirname(HERE)
 # spans each workload must open in its traced run
+EXTRACTION_SPANS = [
+    "pipeline.run_extraction", "lineage.read_checkpoint", "lineage.pending_probe",
+    "lineage.run_guard", "pipeline.stage_write", "pipeline.doc_metrics", "lineage.commit_run",
+]
 SPANS = {
-    "extract_cold": [
-        "pipeline.run_extraction", "lineage.read_checkpoint", "lineage.pending_probe",
-        "lineage.run_guard", "pipeline.stage_write", "pipeline.doc_metrics",
-        "lineage.commit_run",
-    ],
+    "extract_cold": EXTRACTION_SPANS,
+    "extract_resume": EXTRACTION_SPANS,
     "corpus_prep_dedup": [
         "queries_final.q_corpus_prep_final", "queries_corpus.q_semantic_prep",
         "queries_corpus.q_dedup_best_of_cluster", "queries_corpus.connected_components",
