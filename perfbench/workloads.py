@@ -84,13 +84,7 @@ class ExtractCold:
         stored = spark.read.parquet(self.input_dir)
         self.expected_ids = checks.sorted_ids(stored.select("doc_id").toArrow())
         spans = stored.select(F.size("spans").alias("n")).toArrow().column("n")
-        # one untimed extraction of a quarter of the docs: the first
-        # extraction in a JVM is 2-2.5x slower than the later ones, which
-        # the timed runs are. The quarter is taken from every input file,
-        # so that as many tasks, and Python workers, start as in a timed run
-        with timer("warmup_s"):
-            self._untimed_run(stored.where(F.pmod(F.xxhash64("doc_id"), F.lit(4)) == 0),
-                              os.path.join(self.ctx.work_dir, "warmup"))
+        self._warm_up(stored, timer)
         return {
             "docs": len(spans),
             "spans": pc.sum(spans).as_py(),
@@ -106,6 +100,17 @@ class ExtractCold:
             "out": out,
             "checkpoint_files": _dir_stats(os.path.join(out, "checkpoint"), ".parquet")[0],
         }
+
+    def _warm_up(self, stored, timer) -> None:
+        """One untimed extraction of a quarter of the docs: the first
+        extraction in a JVM is 2-2.5x slower than the later ones, which the
+        timed runs are. The quarter is taken from every input file, so that
+        as many tasks, and Python workers, start as in a timed run."""
+        from pyspark.sql import functions as F
+
+        with timer("warmup_s"):
+            self._untimed_run(stored.where(F.pmod(F.xxhash64("doc_id"), F.lit(4)) == 0),
+                              os.path.join(self.ctx.work_dir, "warmup"))
 
     def _seed_output(self, out: str) -> None:
         """What the output dir holds before the run: nothing, here."""
@@ -163,15 +168,16 @@ class ExtractResume(ExtractCold):
     holds ``PRIOR_RUNS`` committed runs over 90% of the docs, so the
     run commits the remaining 10%."""
 
-    def setup(self, timer) -> dict:
+    def _warm_up(self, stored, timer) -> None:
+        """Builds the seed output dir, then warms up with one untimed resume
+        into a copy of it (the first in a JVM is 20-40% slower than the
+        later ones, which the timed runs are)."""
         from pyspark.sql import DataFrame
         from pyspark.sql import functions as F
 
         from ocr_dataset_builder_spark import lineage
 
-        inputs = super().setup(timer)
         spark = self.ctx.spark
-        stored = spark.read.parquet(self.input_dir)
         # the seed decides which docs the earlier runs committed; the buckets
         # are equal, so every seed leaves the same number of docs pending
         ranked = sorted(
@@ -208,15 +214,15 @@ class ExtractResume(ExtractCold):
                         F.lit(0.0).alias("dedup_ratio"),
                     ),
                 )
-        # one untimed resume: the first in a JVM is 20-40% slower than the
-        # later ones, which the timed runs are
-        with timer("resume_warmup_s"):
+        with timer("warmup_s"):
             warm = os.path.join(self.ctx.work_dir, "warmup")
             self._seed_output(warm)
             self._untimed_run(stored, warm)
         self.expected_ids = checks.sorted_ids(pa.table({"doc_id": ranked[PRIOR_RUNS * size:]}))
+
+    def setup(self, timer) -> dict:
+        inputs = super().setup(timer)
         inputs.update(
-            docs_per_run=len(self.expected_ids),
             prior_runs=PRIOR_RUNS,
             seed_checkpoint_files=_dir_stats(
                 os.path.join(self.seed_dir, "checkpoint"), ".parquet"
