@@ -1,28 +1,39 @@
-"""Lineage + checkpoint/resume.
+"""Lineage, checkpoint/resume and the run-commit protocol.
 
 Replaces the reference's append-only text checkpoint logs
 (video/frame_pipeline.py:169-208, 354-363 and duplicates) with two tables:
 
 * ``checkpoint`` — one row per completed doc (doc_id, run_id, status,
   committed_at). Resume = ``left_anti`` join of inputs against
-  status='done' (J5, reference frame_pipeline.py:241-247); stale-entry
-  pruning = ``left_semi`` against current inputs (J6, :226-238).
+  status='done' (J5, reference frame_pipeline.py:241-247).
 * ``lineage`` — per-partition metrics rows (partition_id, doc_id range,
   docs, frames_processed, ocr_chars, dedup_ratio, status, committed_at)
   per the north rule.
+
+Every writer — ``pipeline.run_extraction`` and the three stream daemons
+(``streaming/daemon.watch``) — follows one protocol:
+
+1. **guard** — :func:`is_committed`: a run_id already in the checkpoint
+   is never staged again (the batch run refuses, a replayed micro-batch
+   returns before any write);
+2. **stage** — the run writes its output under its own ``run_id=``
+   directory with mode=overwrite, so a retry of an uncommitted run
+   replaces its orphan instead of duplicating it;
+3. **commit** — :func:`commit_run` appends the checkpoint rows LAST;
+4. **read** — :func:`read_committed` shows readers only the run
+   directories whose run_id reached the checkpoint, so a crash between
+   stage and commit leaves an invisible orphan.
 
 Storage goes through a pluggable table store (``sources/tables.py``):
 the default is a directory of parquet appends; passing
 ``store=IcebergStore(spark, namespace)`` routes the same two operations
 through Iceberg ``writeTo(...).append()`` snapshot commits. The Iceberg
 path is real code gated on the catalog being present
-(tests/test_iceberg_adapter.py skips when the runtime jar is absent —
-this sandbox has none, SURVEY.md §7.4 risk 6).
+(tests/test_iceberg_adapter.py skips when the runtime jar is absent,
+SURVEY.md §7.4 risk 6).
 """
 
 from __future__ import annotations
-
-import os
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
@@ -35,20 +46,22 @@ LINEAGE_SCHEMA = (
 )
 
 
-def _read_or_empty(spark: SparkSession, path: str, schema: str) -> DataFrame:
-    """Read a parquet table, yielding an empty typed relation when the
-    path does not exist yet. The probe is the read itself (catching ONLY
-    the PATH_NOT_FOUND condition), NOT a driver-local ``os.path.exists``
-    — which is always false for hdfs://, s3a:// and any other non-local
-    URI, and would silently restart resume from zero on exactly the
-    distributed deployments this targets. Any other AnalysisException
-    (transient storage fault, corrupted/mismatched schema) re-raises:
-    treating it as "no checkpoint" would restart resume from zero and a
-    second commit would surface duplicate rows."""
+def read_table(spark: SparkSession, path: str, schema: str) -> DataFrame:
+    """Read a parquet table with an explicit schema, yielding the empty
+    typed relation when the path does not exist yet (an existing but
+    still-empty directory reads as empty through the schema). The probe
+    is the read itself (catching ONLY the PATH_NOT_FOUND condition), NOT
+    a driver-local ``os.path.exists`` — which is always false for
+    hdfs://, s3a:// and any other non-local URI, and would silently
+    restart resume from zero on exactly the distributed deployments this
+    targets. Any other AnalysisException (transient storage fault,
+    corrupted table) re-raises: treating it as "no checkpoint" would
+    restart resume from zero and a second commit would surface duplicate
+    rows."""
     from pyspark.errors import AnalysisException
 
     try:
-        return spark.read.parquet(path)
+        return spark.read.schema(schema).parquet(path)
     except AnalysisException as exc:
         condition = (
             exc.getCondition() if hasattr(exc, "getCondition") else exc.getErrorClass()
@@ -84,9 +97,25 @@ def pending_docs(nested: DataFrame, checkpoint: DataFrame) -> DataFrame:
     return nested.join(done, "doc_id", "left_anti")
 
 
-def prune_stale_checkpoint(checkpoint: DataFrame, nested: DataFrame) -> DataFrame:
-    """J6 validity semi-join: checkpoint entries whose doc still exists."""
-    return checkpoint.join(nested.select("doc_id"), "doc_id", "left_semi")
+def is_committed(checkpoint: DataFrame, run_id: str) -> bool:
+    """The run guard: True when ``run_id`` already reached the checkpoint.
+    A committed run's staging directory must never be rewritten — the
+    checkpoint marks its docs done, so resume never re-extracts them."""
+    return checkpoint.where(F.col("run_id") == run_id).limit(1).count() > 0
+
+
+def read_committed(
+    spark: SparkSession, path: str, schema: str, checkpoint_dir: str
+) -> DataFrame:
+    """Committed-only view of a run-partitioned table (``run_id=`` dirs
+    under ``path``): run directories whose run_id never reached the
+    checkpoint at ``checkpoint_dir`` (a crash between stage and commit)
+    are invisible, so retries never surface duplicate rows. The
+    committed-run set is tiny (one id per run) — broadcast semi-join.
+    ``schema`` names ``run_id`` as a string, which also types a numeric
+    run_id partition value as the checkpoint's string column."""
+    runs = read_checkpoint(spark, checkpoint_dir).select("run_id").distinct()
+    return read_table(spark, path, schema).join(F.broadcast(runs), "run_id", "left_semi")
 
 
 def commit_run(
@@ -101,11 +130,13 @@ def commit_run(
 
     ``doc_metrics`` columns: doc_id, frames_processed, ocr_chars,
     dedup_ratio. Partition id is a stable hash bucket of doc_id so a
-    re-run assigns identical buckets (idempotence under retries).
+    re-run assigns identical buckets (idempotence under retries). A
+    numeric doc_id (the dedup daemons key on bigint ids) is stored as a
+    string, the type the table schemas declare.
     """
     backend = _store(spark, checkpoint_dir, store)
     ck = doc_metrics.select(
-        "doc_id",
+        F.col("doc_id").cast("string").alias("doc_id"),
         F.lit(run_id).alias("run_id"),
         F.lit("done").alias("status"),
         F.current_timestamp().alias("committed_at"),
@@ -118,8 +149,8 @@ def commit_run(
         )
         .groupBy("partition_id")
         .agg(
-            F.min("doc_id").alias("doc_id_min"),
-            F.max("doc_id").alias("doc_id_max"),
+            F.min("doc_id").cast("string").alias("doc_id_min"),
+            F.max("doc_id").cast("string").alias("doc_id_max"),
             F.count("*").alias("docs"),
             F.sum("frames_processed").alias("frames_processed"),
             F.sum("ocr_chars").alias("ocr_chars"),

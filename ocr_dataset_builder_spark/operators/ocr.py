@@ -68,67 +68,6 @@ def ocr_media(media: DataFrame, use_arrow: bool = True) -> DataFrame:
     return media.mapInPandas(_ocr_batches, schema=schema)
 
 
-def ocr_spans(flat: DataFrame, use_arrow: bool = True) -> DataFrame:
-    """OCR over a MIXED span relation in one pass: media rows get
-    ``ocr_text``, text rows get NULL. Keeping both kinds in one stage
-    avoids the split/union plan (two scans + an extra shuffle that breaks
-    doc_id partitioning ahead of the reassembly window).
-
-    The Arrow path uses ``mapInArrow`` + pyarrow.compute (C++-vectorized
-    string kernels, zero pandas materialization) — measured meaningfully
-    cheaper than the pandas equivalent at tens of millions of rows, which
-    matters because Python-side time is the shared resource that limits
-    multi-core scaling of this stage.
-    """
-    if not use_arrow:
-        return flat.withColumn(
-            "ocr_text",
-            F.when(
-                F.col("kind") == "media",
-                synthetic_ocr_col(
-                    F.col("doc_id"), F.col("media_ref"), F.col("span_offset")
-                ),
-            ),
-        )
-
-    schema = StructType(
-        list(flat.schema.fields) + [StructField("ocr_text", StringType())]
-    )
-
-    def _ocr_arrow(batches):
-        import pyarrow as pa
-        import pyarrow.compute as pc
-
-        for batch in batches:
-            # <-- a real OCR engine would decode media payloads here,
-            # batch-wise; deterministic stand-in via Arrow kernels:
-            off = batch.column("span_offset")
-            line = pc.cast(
-                pc.subtract(off, pc.multiply(pc.divide(off, 5), 5)), pa.string()
-            )
-            ocr = pc.binary_join_element_wise(
-                pa.scalar("OCR "),
-                batch.column("doc_id"),
-                pa.scalar("/"),
-                pc.coalesce(batch.column("media_ref"), pa.scalar("")),
-                pa.scalar("\nline "),
-                line,
-                pa.scalar(""),
-            )
-            is_media = pc.equal(batch.column("kind"), pa.scalar("media"))
-            ocr = pc.if_else(is_media, ocr, pa.scalar(None, pa.string()))
-            yield pa.RecordBatch.from_arrays(
-                list(batch.columns) + [ocr], schema=pa.schema(schema_arrow)
-            )
-
-    import pyarrow as pa
-
-    schema_arrow = [
-        pa.field(f.name, _to_arrow(f.dataType)) for f in schema.fields
-    ]
-    return flat.mapInArrow(_ocr_arrow, schema=schema)
-
-
 def ocr_scalar_udf(doc_id: F.Column, media_ref: F.Column, off: F.Column) -> F.Column:
     """Scalar Arrow-vectorized pandas UDF form of the OCR stand-in.
 
@@ -172,16 +111,3 @@ def ocr_scalar_udf(doc_id: F.Column, media_ref: F.Column, off: F.Column) -> F.Co
 
     return _ocr(doc_id, media_ref, off)
 
-
-def _to_arrow(dt):
-    import pyarrow as pa
-
-    from pyspark.sql.types import IntegerType as _I, LongType as _L, StringType as _S
-
-    if isinstance(dt, _S):
-        return pa.string()
-    if isinstance(dt, _I):
-        return pa.int32()
-    if isinstance(dt, _L):
-        return pa.int64()
-    raise TypeError(f"unmapped type {dt}")

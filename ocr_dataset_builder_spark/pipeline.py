@@ -22,14 +22,19 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from .functions.cleanup import clean_ocr_col
-from .lineage import commit_run, pending_docs, read_checkpoint
+from .lineage import (
+    commit_run,
+    is_committed,
+    pending_docs,
+    read_checkpoint,
+    read_committed,
+)
 from .operators.ocr import ocr_scalar_udf
-from .synth import explode_spans  # noqa: F401 (public re-export; used by bench)
 
 SPAN_COLS = ["doc_id", "span_pos", "kind", "text", "media_ref", "span_offset"]
 
 
-def extract_spans(nested: DataFrame, use_arrow_ocr: bool = True) -> DataFrame:
+def extract_spans(nested: DataFrame) -> DataFrame:
     """Flagship transformation: ordered, cleaned span rows per document.
 
     Output: (doc_id, ord, kind, text, media_ref, span_offset) where text is
@@ -44,27 +49,25 @@ def extract_spans(nested: DataFrame, use_arrow_ocr: bool = True) -> DataFrame:
     # flagship plan contains ZERO exchanges (the earlier window variant
     # needed one shuffle; verified via explain and pinned by
     # tests/test_plan_quality.py).
-    #
-    def sorted_seq(with_text: bool = True):
-        def fields(s):
-            return F.struct(
-                s["offset"].alias("offset"),
-                s["kind"].alias("kind"),
-                s["text"].alias("text"),
-                s["media_ref"].alias("media_ref"),
-            )
-
-        sorted_spans = F.array_sort(F.transform("spans", fields))
-        return nested.select(
-            "doc_id", F.posexplode(sorted_spans).alias("ord", "span")
-        ).select(
-            "doc_id",
-            F.col("ord").cast("int").alias("ord"),
-            F.col("span.kind").alias("kind"),
-            F.col("span.text").alias("text"),
-            F.col("span.media_ref").alias("media_ref"),
-            F.col("span.offset").alias("span_offset"),
+    def fields(s):
+        return F.struct(
+            s["offset"].alias("offset"),
+            s["kind"].alias("kind"),
+            s["text"].alias("text"),
+            s["media_ref"].alias("media_ref"),
         )
+
+    sorted_spans = F.array_sort(F.transform("spans", fields))
+    seq = nested.select(
+        "doc_id", F.posexplode(sorted_spans).alias("ord", "span")
+    ).select(
+        "doc_id",
+        F.col("ord").cast("int").alias("ord"),
+        F.col("span.kind").alias("kind"),
+        F.col("span.text").alias("text"),
+        F.col("span.media_ref").alias("media_ref"),
+        F.col("span.offset").alias("span_offset"),
+    )
 
     # The OCR stand-in runs as a SCALAR Arrow-vectorized pandas UDF: only
     # the UDF's argument columns (doc_id, media_ref, offset — all narrow)
@@ -74,17 +77,7 @@ def extract_spans(nested: DataFrame, use_arrow_ocr: bool = True) -> DataFrame:
     # a single scan instead of two (the split needed a second pass over
     # the source). The identity Python crossing is this environment's
     # non-scaling resource, so bytes-through-Python is what we minimize.
-    seq = sorted_seq(with_text=True)
-    if use_arrow_ocr:
-        ocr = ocr_scalar_udf(
-            F.col("doc_id"), F.col("media_ref"), F.col("span_offset")
-        )
-    else:
-        from .synth import synthetic_ocr_col
-
-        ocr = synthetic_ocr_col(
-            F.col("doc_id"), F.col("media_ref"), F.col("span_offset")
-        )
+    ocr = ocr_scalar_udf(F.col("doc_id"), F.col("media_ref"), F.col("span_offset"))
     return seq.select(
         "doc_id",
         "ord",
@@ -139,51 +132,52 @@ def next_run_id(spark: SparkSession, output_dir: str, prefix: str = "run") -> st
     return f"{prefix}{i}"
 
 
+def stage_spans(nested: DataFrame, output_dir: str, run_id: str) -> DataFrame:
+    """The stage step of the run-commit protocol (``lineage``): write
+    ``extract_spans(nested)`` under the run's own ``run_id=`` directory
+    with mode=overwrite and return its per-doc metrics, read back from
+    that directory only — O(this run), never a scan of the whole output
+    history."""
+    extracted = extract_spans(nested)
+    staged = run_path(output_dir, run_id)
+    extracted.write.mode("overwrite").parquet(staged)
+    # schema given explicitly: a pending-empty run writes no part files
+    # and schema inference would fail on the bare directory
+    return doc_metrics(
+        nested.sparkSession.read.schema(extracted.schema).parquet(staged)
+    )
+
+
 def run_extraction(
     spark: SparkSession,
     nested: DataFrame,
     output_dir: str,
     run_id: str = "run0",
-    use_arrow_ocr: bool = True,
 ) -> int:
-    """Resumable batch run: anti-join completed docs, extract, stage the
-    run's output under its own ``run_id=`` partition directory, commit the
-    checkpoint last. Returns number of docs processed this run.
+    """Resumable batch run under the run-commit protocol (``lineage``):
+    anti-join completed docs, guard the run_id, stage the run's output
+    under its own ``run_id=`` directory, commit the checkpoint last.
+    Returns number of docs processed this run.
 
-    Failure semantics (at-least-once with idempotent commit): the data
-    write targets ONLY this run's directory with mode=overwrite, so a
-    retry of the same *uncommitted* run_id replaces rather than
-    duplicates; a crash between data write and checkpoint commit leaves
-    an orphan run dir that :func:`read_extracted` filters out (only
-    committed run_ids are visible to readers). Metrics are computed from
-    the staged run dir — O(this run), never a scan of the whole output
-    history.
-
-    Committed-run guard: nothing pending is a no-op (returns 0 without
-    touching storage — the everyday rerun-to-resume case), and reusing a
-    run_id that already reached the checkpoint with docs still pending
-    raises — overwriting a committed run's directory would truncate data
-    the checkpoint marks done (silent permanent loss: those docs are
-    never re-extracted because resume skips them).
+    Nothing pending is a no-op (returns 0 without touching storage — the
+    everyday rerun-to-resume case). Reusing a run_id that already reached
+    the checkpoint with docs still pending raises: overwriting a committed
+    run's directory would truncate data the checkpoint marks done (silent
+    permanent loss: those docs are never re-extracted because resume
+    skips them). A retry of an *uncommitted* run_id replaces its orphan
+    staging dir, which :func:`read_extracted` never shows.
     """
     ck = read_checkpoint(spark, output_dir)
     pending = pending_docs(nested, ck)
     if not pending.limit(1).count():
         return 0
-    if ck.where(F.col("run_id") == run_id).limit(1).count():
+    if is_committed(ck, run_id):
         raise ValueError(
             f"run_id {run_id!r} is already committed in {output_dir!r} but docs "
             "are still pending; pass a fresh run_id — overwriting a committed "
             "run's data directory would lose rows the checkpoint marks done"
         )
-    extracted = extract_spans(pending, use_arrow_ocr=use_arrow_ocr)
-
-    staged = run_path(output_dir, run_id)
-    extracted.write.mode("overwrite").parquet(staged)
-
-    # schema given explicitly: a pending-empty run writes no part files
-    # and schema inference would fail on the bare directory
-    metrics = doc_metrics(spark.read.schema(extracted.schema).parquet(staged))
+    metrics = stage_spans(pending, output_dir, run_id)
     n = metrics.count()
     if n:
         commit_run(spark, output_dir, run_id, metrics)
@@ -197,19 +191,9 @@ EXTRACTED_SCHEMA = (
 
 
 def read_extracted(spark: SparkSession, output_dir: str) -> DataFrame:
-    """Committed-only view of the extracted output: run directories whose
-    run_id never reached the checkpoint (crash between data write and
-    commit) are invisible, so retries can never surface duplicate rows.
-    The committed-run set is tiny (one id per run) — broadcast semi-join.
-    A not-yet-existing output dir (no runs, or only a dry-run) yields the
-    empty typed relation — same convention as the checkpoint readers."""
-    from .lineage import _read_or_empty
-
-    data = _read_or_empty(
-        spark, os.path.join(output_dir, "extracted"), EXTRACTED_SCHEMA
+    """Committed-only view of the extracted output
+    (``lineage.read_committed``). A not-yet-existing output dir (no runs,
+    or only a dry-run) yields the empty typed relation."""
+    return read_committed(
+        spark, os.path.join(output_dir, "extracted"), EXTRACTED_SCHEMA, output_dir
     )
-    # partition-value inference may type a numeric run_id as int —
-    # normalize to string to match the checkpoint column
-    data = data.withColumn("run_id", F.col("run_id").cast("string"))
-    committed = read_checkpoint(spark, output_dir).select("run_id").distinct()
-    return data.join(F.broadcast(committed), "run_id", "left_semi")

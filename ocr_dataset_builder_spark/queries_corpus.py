@@ -2083,17 +2083,15 @@ def _assign_to(
         F.lit(0.0),
         lambda acc, x: acc + x,
     )
-    # _spread BEFORE the broadcast crossJoin: the O(n*k) interpreted
-    # folds then run on shuffle-partition-count tasks instead of the
-    # scan's task count (1 at bench scale — measured 0.88 s -> 0.23 s
-    # per assignment, r8). Round-robin (no key) on purpose: the
-    # downstream per-vector agg/window then needs its own exchange, so
-    # the fold sits BELOW a shuffle boundary and multi-reference plans
-    # (semantic_prep/flags reference the assignment 3-5x) dedup it via
-    # ReusedExchange instead of re-running the quadratic per reference.
-    # A vec_id's k distance rows never split across tasks (they come
-    # from one input row), so the partial min still completes map-side
-    # and the exchange carries one row per vector.
+    # _spread BEFORE the broadcast crossJoin: when the input is
+    # under-parallel (fewer partitions than spark.sql.shuffle.partitions;
+    # one scan task at bench scale) it is hash-repartitioned on vec_id,
+    # so the O(n*k) interpreted folds run on shuffle-partition-count
+    # tasks (measured 0.88 s -> 0.23 s per assignment, r8). An input
+    # that is already parallel passes through unrepartitioned. Either
+    # way a vec_id's k distance rows never split across tasks (they come
+    # from one input row), so the partial per-vector min completes
+    # map-side.
     d2 = _spread(e, "vec_id").crossJoin(F.broadcast(cent)).select(
         "vec_id", "cent_id", d2_expr.alias("d2")
     )

@@ -40,9 +40,9 @@ class ParquetStore:
         return os.path.join(self.root, name)
 
     def read(self, name: str, schema: str) -> DataFrame:
-        from ..lineage import _read_or_empty
+        from ..lineage import read_table
 
-        return _read_or_empty(self.spark, self._path(name), schema)
+        return read_table(self.spark, self._path(name), schema)
 
     def append(self, name: str, df: DataFrame) -> None:
         df.write.mode("append").parquet(self._path(name))

@@ -1,4 +1,5 @@
-"""D1 — daemon mode as Structured Streaming.
+"""D1 — daemon mode as Structured Streaming, and the stream skeleton all
+three daemons share.
 
 Reference: an infinite loop that re-lists the input dir every
 ``watch_interval_seconds`` (default 300 s), diffs against the checkpoint
@@ -6,78 +7,71 @@ log, and processes new directories
 (video/frame_pipeline.py:437-522 and duplicates). There is no true event
 stream — it is incremental batch over a growing file set.
 
-Rebuild, two equivalent modes:
+Rebuild: :func:`watch` runs a Structured Streaming file source over an
+input parquet directory with ``foreachBatch``; Spark's stream checkpoint
+tracks consumed files, so each trigger processes exactly the new ones.
+``trigger`` is either :data:`AVAILABLE_NOW` (process the backlog, then
+exit — a daemon is this in a scheduler loop) or
+``{"processingTime": interval}`` (one long-running query, the reference's
+watch loop). Every micro-batch follows the run-commit protocol of
+``lineage`` (D2, the reference's "checkpoint only after full success"):
 
-* :func:`watch_available_now` — Structured Streaming file source over the
-  nested-documents parquet directory with ``trigger(availableNow=True)``
-  + ``foreachBatch``: Spark's checkpoint tracks consumed files, each
-  invocation processes exactly the new ones, then exits. A daemon is this
-  in a scheduler loop — or the same code with
-  ``trigger(processingTime='300 seconds')``.
-* :func:`daemon_pass` — the reference's literal semantics: relist + J5
-  anti-join against the lineage checkpoint (pipeline.run_extraction
-  already is that), per pass.
+1. the batch's run id is ``<prefix>-b<batch_id>``, the prefix owned by
+   the stream checkpoint (:func:`_checkpoint_run_prefix`);
+2. guard — a batch whose run id is already committed (re-delivered after
+   a crash between the commit and the stream-checkpoint write) returns
+   before any write;
+3. stage — the daemon's ``stage(batch_df, batch_run)`` writes its
+   run-scoped directories with mode=overwrite (a re-delivered
+   uncommitted batch replaces its own orphan) and returns the per-doc
+   metrics relation, read back from the staged output;
+4. commit — ``lineage.commit_run`` appends the checkpoint rows last.
 
-Delivery: at-least-once with idempotent commit (D2 — the reference's
-"checkpoint only after full success"). Each micro-batch stages its data
-under a run-scoped ``run_id=`` directory with mode=overwrite, so a
-re-delivered batch REPLACES its own previous partial output instead of
-appending duplicates; a crash between the data write and the checkpoint
-commit leaves an orphan run dir that ``pipeline.read_extracted`` hides
-from readers (committed run_ids only). No watermarks/event-time: the
-reference has none (D3); batching is count-based (A2), not time-based.
+Readers see committed runs only (``lineage.read_committed``). No
+watermarks/event-time: the reference has none (D3); batching is
+count-based (A2), not time-based. This module's own stage is the
+extraction (``pipeline.stage_spans``); streaming/dedup_daemon.py and
+streaming/semantic_daemon.py plug theirs into the same :func:`watch`.
+:func:`daemon_pass` keeps the reference's literal relist + J5 anti-join
+semantics as one ``pipeline.run_extraction`` per pass.
 """
 
 from __future__ import annotations
 
 import os
+from typing import Callable
 
 from pyspark.sql import DataFrame, SparkSession
 
-from ..pipeline import extract_spans, doc_metrics, run_path
-from ..lineage import commit_run
+from ..lineage import commit_run, is_committed, read_checkpoint
+from ..pipeline import stage_spans
 
 NESTED_SCHEMA = (
     "doc_id string, "
     "spans array<struct<kind:string,text:string,media_ref:string,offset:int>>"
 )
 
+AVAILABLE_NOW = {"availableNow": True}
 
-def _batch_processor(output_dir: str, run_id: str, processed: dict):
-    """The shared foreachBatch body: run-scoped overwrite staging +
-    checkpoint-last commit (D2). Re-delivery of a batch_id replaces its
-    own output (idempotent); metrics read ONLY the staged dir — O(batch),
+Stage = Callable[[DataFrame, str], DataFrame]
+
+
+def _batch_processor(output_dir: str, run_id: str, stage: Stage, processed: dict):
+    """The shared foreachBatch body: guard, stage, commit last. Metrics
+    come from ``stage``'s read-back of its staged output — O(batch),
     never a rescan of the whole output history."""
 
     def _process(batch_df: DataFrame, batch_id: int) -> None:
-        from pyspark.sql import functions as F
-
-        from ..lineage import read_checkpoint
-
-        if batch_df.isEmpty():
+        spark = batch_df.sparkSession
+        batch_run = f"{run_id}-b{batch_id}"
+        if batch_df.isEmpty() or is_committed(
+            read_checkpoint(spark, output_dir), batch_run
+        ):
             return
-        batch_run_id = f"{run_id}-b{batch_id}"
-        staged = run_path(output_dir, batch_run_id)
-        extracted = extract_spans(batch_df)
-        extracted.write.mode("overwrite").parquet(staged)
-        metrics = doc_metrics(
-            batch_df.sparkSession.read.schema(extracted.schema).parquet(staged)
-        )
+        metrics = stage(batch_df, batch_run)
         n = metrics.count()
-        # a batch re-delivered AFTER its commit (crash between commit and
-        # the stream-checkpoint write) recomputes + overwrites its staging
-        # (repairing any partial overwrite) but must not re-append the
-        # checkpoint rows — a duplicate set double-counts the run for
-        # lineage readers
-        already_committed = (
-            read_checkpoint(batch_df.sparkSession, output_dir)
-            .where(F.col("run_id") == batch_run_id)
-            .limit(1)
-            .count()
-            > 0
-        )
-        if n and not already_committed:
-            commit_run(batch_df.sparkSession, output_dir, batch_run_id, metrics)
+        if n:
+            commit_run(spark, output_dir, batch_run, metrics)
             processed["n"] += n
 
     return _process
@@ -148,17 +142,42 @@ def _checkpoint_run_prefix(checkpoint_dir: str, run_id: str) -> str:
     return run_id
 
 
-def _watch_stream(spark: SparkSession, input_dir: str, output_dir: str, run_id: str):
+def watch(
+    spark: SparkSession,
+    schema: str,
+    input_dir: str,
+    output_dir: str,
+    run_id: str,
+    stage: Stage,
+    trigger: dict,
+):
+    """Start the stream over ``input_dir`` (parquet files of ``schema``)
+    whose micro-batches go through ``stage`` under the run-commit
+    protocol, committing into ``output_dir``. Returns
+    ``(StreamingQuery, processed_counter)``; the caller owns the
+    lifecycle. Every daemon keeps its stream checkpoint at
+    ``<output_dir>/_stream_checkpoint``, so the two trigger modes share it
+    and a deployment can stop the long-running query and drain the
+    backlog with an availableNow pass, or vice versa, without ever
+    double-processing a file."""
     processed = {"n": 0}
     checkpoint_dir = os.path.join(output_dir, "_stream_checkpoint")
     prefix = _checkpoint_run_prefix(checkpoint_dir, run_id)
-    writer = (
-        spark.readStream.schema(NESTED_SCHEMA)
+    query = (
+        spark.readStream.schema(schema)
         .parquet(input_dir)
-        .writeStream.foreachBatch(_batch_processor(output_dir, prefix, processed))
+        .writeStream.foreachBatch(
+            _batch_processor(output_dir, prefix, stage, processed)
+        )
         .option("checkpointLocation", checkpoint_dir)
+        .trigger(**trigger)
+        .start()
     )
-    return writer, processed
+    return query, processed
+
+
+def _extract_stage(output_dir: str) -> Stage:
+    return lambda batch_df, batch_run: stage_spans(batch_df, output_dir, batch_run)
 
 
 def watch_available_now(
@@ -169,9 +188,11 @@ def watch_available_now(
 ) -> int:
     """Process all not-yet-consumed input files, then stop. Returns the
     number of docs processed in this invocation."""
-    writer, processed = _watch_stream(spark, input_dir, output_dir, run_id)
-    stream = writer.trigger(availableNow=True).start()
-    stream.awaitTermination()
+    query, processed = watch(
+        spark, NESTED_SCHEMA, input_dir, output_dir, run_id,
+        _extract_stage(output_dir), AVAILABLE_NOW,
+    )
+    query.awaitTermination()
     return processed["n"]
 
 
@@ -185,17 +206,14 @@ def watch_continuous(
     """The reference daemon's infinite watch loop
     (video/frame_pipeline.py:437-522, 300 s default interval) as ONE
     long-running Structured Streaming query: same micro-batch body and
-    stream checkpoint as :func:`watch_available_now`, but
-    ``trigger(processingTime=interval)`` keeps it alive — each tick
-    lists the input dir, processes only never-consumed files, and
-    commits run-scoped. Returns ``(StreamingQuery, processed_counter)``;
-    the caller owns the lifecycle (``query.stop()``). The two modes share
-    the stream checkpoint, so a deployment can stop the daemon and drain
-    the backlog with an availableNow pass, or vice versa, without ever
-    double-processing a file."""
-    writer, processed = _watch_stream(spark, input_dir, output_dir, run_id)
-    query = writer.trigger(processingTime=interval).start()
-    return query, processed
+    stream checkpoint as :func:`watch_available_now`, but each
+    ``interval`` tick lists the input dir and processes only
+    never-consumed files. Returns ``(StreamingQuery, processed_counter)``;
+    the caller owns the lifecycle (``query.stop()``)."""
+    return watch(
+        spark, NESTED_SCHEMA, input_dir, output_dir, run_id,
+        _extract_stage(output_dir), {"processingTime": interval},
+    )
 
 
 def daemon_pass(

@@ -1,6 +1,7 @@
 """Streaming incremental dedup (streaming/dedup_daemon.py): two
 availableNow passes where pass 2 is deduped against pass 1's committed
-fingerprint index, plus replay idempotence of a committed batch."""
+fingerprint index, plus a replay of committed batches that writes
+nothing."""
 
 from __future__ import annotations
 
@@ -12,7 +13,7 @@ from pyspark.sql import functions as F
 
 from ocr_dataset_builder_spark.streaming.dedup_daemon import (
     DOCS_SCHEMA,
-    _dedup_batch_processor,
+    _dedup_stage,
     read_deduped,
     read_index,
     watch_dedup_available_now,
@@ -90,10 +91,11 @@ def test_dedup_daemon_incremental_and_replay(spark):
         idx2 = {r["fp"]: r["n_occ"] for r in read_index(spark, idx_dir, out_dir).collect()}
         assert idx2 == idx1
 
-        # replay a COMMITTED batch (crash between commit_run and the
-        # stream-checkpoint write): the processor must exclude its own
-        # delta from the index read and recompute identical outputs
+        # replay COMMITTED batches (crash between commit_run and the
+        # stream-checkpoint write): the run guard must return before any
+        # write, leaving staged text, index and checkpoint untouched
         from ocr_dataset_builder_spark.streaming.daemon import (
+            _batch_processor,
             _checkpoint_run_prefix,
         )
 
@@ -111,12 +113,26 @@ def test_dedup_daemon_incremental_and_replay(spark):
             for r in read_checkpoint(spark, out_dir).collect()
         )
         replay_counter = {"n": 0}
-        proc = _dedup_batch_processor(
-            out_dir, idx_dir, prefix, replay_counter, _SUBSTR_W
+        proc = _batch_processor(
+            out_dir, prefix, _dedup_stage(out_dir, idx_dir, _SUBSTR_W), replay_counter
         )
+
+        # zero file churn in the staged dirs, not just value idempotence
+        def _mtimes():
+            out = {}
+            for root in (os.path.join(out_dir, "deduped"), idx_dir):
+                for b in (0, 1):
+                    d = os.path.join(root, f"run_id={prefix}-b{b}")
+                    for f in os.listdir(d):
+                        p = os.path.join(d, f)
+                        out[p] = os.path.getmtime(p)
+            return out
+
+        mt_before = _mtimes()
         # batch 0 was day 1 (first availableNow pass), batch 1 day 2
         proc(spark.createDataFrame(_DAY1, DOCS_SCHEMA), 0)
         proc(spark.createDataFrame(_DAY2, DOCS_SCHEMA), 1)
+        assert _mtimes() == mt_before
         after_rows = sorted(
             map(tuple, read_deduped(spark, out_dir).drop("run_id").collect())
         )

@@ -45,10 +45,9 @@ def python_oracle(sf_dir: str) -> dict[str, list[tuple]]:
     return docs
 
 
-@pytest.mark.parametrize("use_arrow", [True, False])
-def test_span_sequence_equality(spark, sf_dir, use_arrow):
+def test_span_sequence_equality(spark, sf_dir):
     nested = synth.documents_spans(spark, sf_dir)
-    got = extract_spans(nested, use_arrow_ocr=use_arrow).collect()
+    got = extract_spans(nested).collect()
     by_doc: dict[str, list] = {}
     for r in got:
         by_doc.setdefault(r["doc_id"], []).append(r)

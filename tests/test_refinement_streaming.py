@@ -97,7 +97,12 @@ def test_jsonl_export(spark, sf_dir):
 
 
 def test_streaming_daemon_incremental(spark, sf_dir):
-    from ocr_dataset_builder_spark.streaming.daemon import watch_available_now
+    from ocr_dataset_builder_spark.lineage import read_checkpoint
+    from ocr_dataset_builder_spark.streaming.daemon import (
+        _batch_processor,
+        _extract_stage,
+        watch_available_now,
+    )
 
     nested = synth.documents_spans(spark, sf_dir)
     part1 = nested.where(F.col("doc_id").cast("bigint") % 2 == 0)
@@ -122,6 +127,26 @@ def test_streaming_daemon_incremental(spark, sf_dir):
 
         extracted = spark.read.parquet(f"{out_dir}/extracted")
         assert extracted.select("doc_id").distinct().count() == n1 + n2
+
+        # batch 0 re-delivered after its commit (crash between commit_run
+        # and the stream-checkpoint write) stops at the run guard: no
+        # re-staging, no second set of checkpoint rows, nothing counted
+        staged = os.path.join(out_dir, "extracted", "run_id=s1-b0")
+
+        def _mtimes():
+            return {
+                f: os.path.getmtime(os.path.join(staged, f))
+                for f in os.listdir(staged)
+            }
+
+        mt_before = _mtimes()
+        ck_before = sorted(map(tuple, read_checkpoint(spark, out_dir).collect()))
+        counter = {"n": 0}
+        proc = _batch_processor(out_dir, "s1", _extract_stage(out_dir), counter)
+        proc(part1, 0)
+        assert _mtimes() == mt_before
+        assert sorted(map(tuple, read_checkpoint(spark, out_dir).collect())) == ck_before
+        assert counter["n"] == 0
     finally:
         shutil.rmtree(in_dir, ignore_errors=True)
         shutil.rmtree(out_dir, ignore_errors=True)

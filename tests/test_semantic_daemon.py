@@ -1,7 +1,7 @@
 """Streaming incremental SEMANTIC dedup (streaming/semantic_daemon.py):
 two availableNow passes where pass 2 is deduped against pass 1's
-committed kept-store, plus replay idempotence of a committed batch —
-the embedding twin of test_dedup_daemon.
+committed kept-store, plus a replay of committed batches that writes
+nothing — the embedding twin of test_dedup_daemon.
 """
 
 from __future__ import annotations
@@ -12,7 +12,7 @@ import tempfile
 
 from ocr_dataset_builder_spark.streaming.semantic_daemon import (
     EMB_SCHEMA,
-    _semantic_batch_processor,
+    _semantic_stage,
     build_semantic_centroids,
     read_kept_store,
     read_verdicts,
@@ -105,10 +105,11 @@ def test_semantic_daemon_incremental_and_replay(spark):
         assert kept2 == {101, 102, 201, 202}
 
         # replay COMMITTED batches (crash between commit_run and the
-        # stream-checkpoint write): own-delta exclusion must make the
-        # recompute byte-identical and the commit a no-op
+        # stream-checkpoint write): the run guard must return before any
+        # write, leaving verdicts, kept-store and checkpoint untouched
         from ocr_dataset_builder_spark.lineage import read_checkpoint
         from ocr_dataset_builder_spark.streaming.daemon import (
+            _batch_processor,
             _checkpoint_run_prefix,
         )
 
@@ -123,14 +124,14 @@ def test_semantic_daemon_incremental_and_replay(spark):
             os.path.join(out_dir, "_stream_checkpoint"), "ignored"
         )
         counter = {"n": 0}
-        proc = _semantic_batch_processor(
-            out_dir, store_dir, cent_dir, prefix, counter
+        proc = _batch_processor(
+            out_dir, prefix, _semantic_stage(out_dir, store_dir, cent_dir), counter
         )
         # the committed-batch guard must short-circuit BEFORE any write
-        # (ADVICE r6: an out-of-order replay of b0 after b1's keeps
-        # landed would otherwise recompute against b1's store delta and
-        # overwrite b0's committed verdicts) — pin zero file churn in
-        # the staged verdict dirs, not just value idempotence
+        # (an out-of-order replay of b0 after b1's keeps landed would
+        # otherwise recompute against b1's store delta and overwrite
+        # b0's committed verdicts) — pin zero file churn in the staged
+        # verdict dirs, not just value idempotence
         def _mtimes():
             out = {}
             for b in (0, 1):
