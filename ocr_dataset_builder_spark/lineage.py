@@ -46,29 +46,43 @@ LINEAGE_SCHEMA = (
 )
 
 
-def read_table(spark: SparkSession, path: str, schema: str) -> DataFrame:
-    """Read a parquet table with an explicit schema, yielding the empty
-    typed relation when the path does not exist yet (an existing but
-    still-empty directory reads as empty through the schema). The probe
-    is the read itself (catching ONLY the PATH_NOT_FOUND condition), NOT
-    a driver-local ``os.path.exists`` — which is always false for
-    hdfs://, s3a:// and any other non-local URI, and would silently
-    restart resume from zero on exactly the distributed deployments this
-    targets. Any other AnalysisException (transient storage fault,
-    corrupted table) re-raises: treating it as "no checkpoint" would
-    restart resume from zero and a second commit would surface duplicate
-    rows."""
-    from pyspark.errors import AnalysisException
+def empty_table(spark: SparkSession, schema: str) -> DataFrame:
+    """The typed relation with no rows, as a JVM ``LocalRelation``: its
+    row count is a plan fact, so Catalyst's empty-relation propagation
+    folds joins against it away (an anti-join with an empty right side
+    becomes its left side; no shuffle, no job). A Python
+    ``createDataFrame([], schema)`` is an RDD scan instead, whose
+    emptiness the optimizer cannot see. The one constructor both stores
+    (``sources/tables.py``) use for a table that does not exist."""
+    jvm = spark.sparkContext._jvm
+    jschema = jvm.org.apache.spark.sql.types.StructType.fromDDL(schema)
+    jdf = spark._jsparkSession.createDataFrame(jvm.java.util.ArrayList(), jschema)
+    return DataFrame(jdf, spark)
 
-    try:
-        return spark.read.schema(schema).parquet(path)
-    except AnalysisException as exc:
-        condition = (
-            exc.getCondition() if hasattr(exc, "getCondition") else exc.getErrorClass()
-        )
-        if condition != "PATH_NOT_FOUND":
-            raise
-        return spark.createDataFrame([], schema)
+
+def read_table(spark: SparkSession, path: str, schema: str) -> DataFrame:
+    """Read a parquet table with an explicit schema; a path that does not
+    exist yet reads as :func:`empty_table` (an existing but still-empty
+    directory reads as empty through the schema).
+
+    "Missing" is asked of the path's own Hadoop ``FileSystem.exists``
+    under the session's Hadoop configuration, so hdfs://, s3a:// and
+    other non-local URIs resolve through their own filesystem (a
+    driver-local ``os.path.exists`` is false for all of them and would
+    silently restart resume from zero on exactly the distributed
+    deployments this targets). It is asked rather than inferred from a
+    failed read: the failed read is the slower probe, logs a WARN stack
+    trace on every cold run and, once any ``pyspark.sql.Observation`` has
+    fired in the session, an ERROR from the listener bus. Any error of
+    the read itself (transient storage fault, corrupted table) raises:
+    treating it as "no checkpoint" would restart resume from zero and a
+    second commit would surface duplicate rows."""
+    jvm = spark.sparkContext._jvm
+    jpath = jvm.org.apache.hadoop.fs.Path(path)
+    fs = jpath.getFileSystem(spark._jsparkSession.sessionState().newHadoopConf())
+    if not fs.exists(jpath):
+        return empty_table(spark, schema)
+    return spark.read.schema(schema).parquet(path)
 
 
 def _store(spark: SparkSession, checkpoint_dir: str, store=None):
@@ -92,9 +106,19 @@ def read_lineage(spark: SparkSession, checkpoint_dir: str, store=None) -> DataFr
 
 
 def pending_docs(nested: DataFrame, checkpoint: DataFrame) -> DataFrame:
-    """J5 resume anti-join: inputs minus completed docs."""
-    done = checkpoint.where(F.col("status") == "done").select("doc_id").distinct()
-    return nested.join(done, "doc_id", "left_anti")
+    """J5 resume anti-join: the input docs with work to do — at least one
+    span — minus completed docs.
+
+    A doc without spans (empty or null array) explodes to no rows, so it
+    is never staged or checkpointed; counting it as pending would keep
+    every rerun from ever being the no-op it should be. The checkpoint's
+    ``doc_id`` column joins as scanned, with no ``distinct``: a left-anti
+    join already ignores duplicate keys on its right side, so a distinct
+    would only put an aggregate and a shuffle in front of the broadcast
+    build side (the registered J5 form ``queries_joins.q_resume_pending``
+    has none either)."""
+    done = checkpoint.where(F.col("status") == "done").select("doc_id")
+    return nested.where(F.size("spans") > 0).join(done, "doc_id", "left_anti")
 
 
 def is_committed(checkpoint: DataFrame, run_id: str) -> bool:

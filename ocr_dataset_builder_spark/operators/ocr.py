@@ -91,8 +91,11 @@ def ocr_scalar_udf(doc_id: F.Column, media_ref: F.Column, off: F.Column) -> F.Co
         # stage, so its per-batch cost is the scaling-limiting term).
         # Integer divide-multiply-subtract = truncated modulo, matching
         # the JVM/DuckDB `%` for negative offsets too.
-        a_doc = pa.array(doc_id_s)
-        a_ref = pa.array(ref_s)
+        # explicit types: a batch whose media_ref is all NULL (text-only
+        # docs) would otherwise infer Arrow type null, which coalesce
+        # has no kernel for
+        a_doc = pa.array(doc_id_s, type=pa.string())
+        a_ref = pa.array(ref_s, type=pa.string())
         a_off = pa.array(off_s, type=pa.int64())
         line = pc.cast(
             pc.subtract(a_off, pc.multiply(pc.divide(a_off, 5), 5)), pa.string()

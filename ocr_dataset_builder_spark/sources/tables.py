@@ -68,9 +68,11 @@ class IcebergStore:
         return f"{self.namespace}.{name}"
 
     def read(self, name: str, schema: str) -> DataFrame:
+        from ..lineage import empty_table
+
         full = self._table(name)
         if not self.spark.catalog.tableExists(full):
-            return self.spark.createDataFrame([], schema)
+            return empty_table(self.spark, schema)
         return self.spark.read.table(full)
 
     def append(self, name: str, df: DataFrame) -> None:

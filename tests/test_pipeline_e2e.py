@@ -6,6 +6,7 @@ synthetic OCR + offset ordering) over the same derived rows.
 
 from __future__ import annotations
 
+import os
 import shutil
 import tempfile
 
@@ -22,6 +23,7 @@ from ocr_dataset_builder_spark.pipeline import (
     run_path,
 )
 from ocr_dataset_builder_spark.lineage import read_checkpoint, read_lineage
+from ocr_dataset_builder_spark.streaming.daemon import NESTED_SCHEMA
 
 
 def python_oracle(sf_dir: str) -> dict[str, list[tuple]]:
@@ -36,13 +38,18 @@ def python_oracle(sf_dir: str) -> dict[str, list[tuple]]:
     ).fetchall()
     docs: dict[str, list[tuple]] = {}
     for doc_id, off, kind, text, media_ref in rows:
-        if kind == "media":
-            ocr = f"OCR {doc_id}/{media_ref}\nline {off % 5}"
-            out_text = clean_ocr_text(ocr)
-        else:
-            out_text = clean_ocr_text(text)
-        docs.setdefault(doc_id, []).append((kind, out_text, media_ref))
+        docs.setdefault(doc_id, []).append(
+            (kind, oracle_text(doc_id, off, kind, text, media_ref), media_ref)
+        )
     return docs
+
+
+def oracle_text(doc_id: str, off: int, kind: str, text, media_ref) -> str:
+    """One span's output text under the reference semantics: cleaned
+    synthetic OCR for a media span, the cleaned raw text otherwise."""
+    if kind == "media":
+        return clean_ocr_text(f"OCR {doc_id}/{media_ref}\nline {off % 5}")
+    return clean_ocr_text(text)
 
 
 def test_span_sequence_equality(spark, sf_dir):
@@ -58,6 +65,48 @@ def test_span_sequence_equality(spark, sf_dir):
         assert [r["ord"] for r in rows] == list(range(len(rows))), doc_id
         got_seq = [(r["kind"], r["text"], r["media_ref"]) for r in rows]
         assert got_seq == want[doc_id], f"span mismatch in doc {doc_id}"
+
+
+def test_text_only_docs_extract(spark, tmp_path):
+    """A batch whose spans are all text has no media_ref at all: the OCR
+    UDF must still type its arguments (an untyped all-NULL column reaches
+    Arrow as type null, which fails the whole stage write)."""
+    spans = {
+        "t1": [("text", "hello", None, 0)],
+        "t2": [("text", "  b \t b \n\n", None, 5), ("text", "a\r\n  a ", None, 1)],
+    }
+    nested = spark.createDataFrame(list(spans.items()), NESTED_SCHEMA)
+    out = str(tmp_path / "out")
+    assert run_extraction(spark, nested, out, run_id="run0") == 2
+
+    got: dict[str, list] = {}
+    for r in sorted(read_extracted(spark, out).collect(), key=lambda r: r["ord"]):
+        got.setdefault(r["doc_id"], []).append((r["kind"], r["text"], r["media_ref"]))
+    want = {
+        doc_id: [
+            (kind, oracle_text(doc_id, off, kind, text, ref), ref)
+            for kind, text, ref, off in sorted(rows, key=lambda s: s[3])
+        ]
+        for doc_id, rows in spans.items()
+    }
+    assert got == want
+
+
+def test_docs_without_spans_are_never_pending(spark, tmp_path):
+    """A doc with an empty or NULL spans array has nothing to extract and
+    is never checkpointed; it must not count as pending, or a rerun of a
+    finished input would refuse its own run_id and every fresh run_id
+    would stage an empty orphan directory."""
+    nested = spark.createDataFrame(
+        [("e1", []), ("n1", None), ("m1", [("media", None, "f0", 0)])], NESTED_SCHEMA
+    )
+    out = str(tmp_path / "out")
+    assert run_extraction(spark, nested, out, run_id="run0") == 1
+    assert os.listdir(os.path.join(out, "extracted")) == ["run_id=run0"]
+
+    assert run_extraction(spark, nested, out, run_id="run0") == 0
+    assert run_extraction(spark, nested, out, run_id="run1") == 0
+    assert os.listdir(os.path.join(out, "extracted")) == ["run_id=run0"]
 
 
 def test_resume_anti_join_equals_cold_run(spark, sf_dir):

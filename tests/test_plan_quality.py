@@ -79,6 +79,40 @@ def test_flagship_single_scan_and_no_text_through_python(spark, nested_on_disk):
         assert "text#" not in ln, ln
 
 
+def test_cold_resume_plan_drops_the_anti_join(spark, nested_on_disk, tmp_path):
+    """Over a never-written output dir the checkpoint reads as an empty
+    local relation, so Catalyst folds the resume anti-join away and the
+    cold extraction is the flagship's zero-exchange plan."""
+    from ocr_dataset_builder_spark.lineage import pending_docs, read_checkpoint
+
+    pending = pending_docs(nested_on_disk, read_checkpoint(spark, str(tmp_path / "out")))
+    optimized = pending._jdf.queryExecution().optimizedPlan().toString()
+    assert "Join" not in optimized, optimized
+    plan = _executed_plan(extract_spans(pending))
+    assert "Exchange" not in plan, plan
+
+
+def test_resume_broadcasts_checkpoint_as_scanned(spark, nested_on_disk, tmp_path):
+    """Over a committed checkpoint the anti-join's build side is the
+    checkpoint's doc_id column straight from its scan: one broadcast, no
+    shuffle and no aggregate in front of it."""
+    from ocr_dataset_builder_spark.lineage import commit_run, pending_docs, read_checkpoint
+
+    out = str(tmp_path / "out")
+    done = nested_on_disk.select(
+        "doc_id",
+        F.lit(1).alias("frames_processed"),
+        F.lit(1).alias("ocr_chars"),
+        F.lit(0.0).alias("dedup_ratio"),
+    ).where(F.col("doc_id").cast("bigint") % 2 == 0)
+    commit_run(spark, out, "run0", done)
+
+    plan = _executed_plan(pending_docs(nested_on_disk, read_checkpoint(spark, out)))
+    assert plan.count("BroadcastExchange") == 1, plan
+    assert "ENSURE_REQUIREMENTS" not in plan, plan
+    assert "HashAggregate" not in plan, plan
+
+
 def test_broadcast_join_for_small_dim(spark, sf_dir):
     """J3 summary join must broadcast the small side."""
     from ocr_dataset_builder_spark.queries_joins import q_summary_broadcast

@@ -4,6 +4,7 @@ roundtrip, and the same-as-previous fill."""
 
 from __future__ import annotations
 
+import functools
 import re
 
 from hypothesis import given, settings
@@ -83,8 +84,12 @@ def test_fref_roundtrip(vals):
 # --- W1 parity against the REFERENCE reconstruction executed verbatim ---
 # pytorch_dataset.py imports torch/PIL (absent here), so the method is
 # AST-extracted and exec'd standalone — the same execute-the-reference
-# discipline test_augment.py uses for the augmentation functions.
+# discipline test_augment.py uses for the augmentation functions. Every
+# reference function loads lazily inside its parity test, so the
+# reference-free tests above run without the snapshot while each parity
+# test fails naming the missing file.
 
+@functools.cache
 def _load_reference_reconstruct():
     import ast
     import logging
@@ -106,15 +111,10 @@ def _load_reference_reconstruct():
     return ns["_reconstruct_llm_output"]
 
 
-_REF_RECONSTRUCT = _load_reference_reconstruct()
-
-
-class _Shim:
-    _reconstruct_llm_output = _REF_RECONSTRUCT
-
-
 def _reference_decode(vals: list[str]) -> list[str]:
-    shim = _Shim()
+    shim = type(
+        "_Shim", (), {"_reconstruct_llm_output": _load_reference_reconstruct()}
+    )()
     cache: dict[int, str] = {}
     return [
         shim._reconstruct_llm_output(vals, i, cache) for i in range(len(vals))
@@ -177,17 +177,19 @@ def _load_reference_fn(path: str, name: str, ns: dict):
     return ns[name]
 
 
-_REF_CLEAN = _load_reference_fn(
-    "/root/reference/ocr_dataset_builder/tesseract/ocr_utils.py",
-    "clean_tesseract_ocr",
-    {"re": re},
-)
+@functools.cache
+def _load_reference_clean():
+    return _load_reference_fn(
+        "/root/reference/ocr_dataset_builder/tesseract/ocr_utils.py",
+        "clean_tesseract_ocr",
+        {"re": re},
+    )
 
 
 @settings(max_examples=300, deadline=None)
 @given(ascii_text)
 def test_cleanup_matches_reference_verbatim(s):
-    assert clean_ocr_text(s) == _REF_CLEAN(s)
+    assert clean_ocr_text(s) == _load_reference_clean()(s)
 
 
 # --- T5 parity against the REFERENCE image-response parser executed
@@ -197,6 +199,7 @@ def test_cleanup_matches_reference_verbatim(s):
 # fence), redundancy placeholders (incl. frame-0 misuse), digit-less
 # frames, duplicate task headers, and free text.
 
+@functools.cache
 def _load_reference_image_parse():
     import logging
 
@@ -206,8 +209,6 @@ def _load_reference_image_parse():
         {"re": re, "logging": logging},
     )
 
-
-_REF_IMAGE_PARSE = _load_reference_image_parse()
 
 _resp_line = st.one_of(
     st.sampled_from(
@@ -243,7 +244,7 @@ def test_image_parse_matches_reference_verbatim(resp):
         parse_image_response,
     )
 
-    assert parse_image_response(resp) == _REF_IMAGE_PARSE(resp)
+    assert parse_image_response(resp) == _load_reference_image_parse()(resp)
 
 
 # --- T6 parity against the REFERENCE text-refinement parser executed
@@ -251,20 +252,15 @@ def test_image_parse_matches_reference_verbatim(resp):
 # AST extraction — the nested parse_frames_from_block rides along inside
 # the outer FunctionDef).
 
-_REF_TEXT_PARSE = None
+@functools.cache
+def _load_reference_text_parse():
+    import logging
 
-
-def _ref_text_parse(resp):
-    global _REF_TEXT_PARSE
-    if _REF_TEXT_PARSE is None:
-        import logging
-
-        _REF_TEXT_PARSE = _load_reference_fn(
-            "/root/reference/ocr_dataset_builder/llm/text_processing.py",
-            "parse_text_llm_response",
-            {"re": re, "logging": logging},
-        )
-    return _REF_TEXT_PARSE(resp)
+    return _load_reference_fn(
+        "/root/reference/ocr_dataset_builder/llm/text_processing.py",
+        "parse_text_llm_response",
+        {"re": re, "logging": logging},
+    )
 
 
 _text_resp_line = st.one_of(
@@ -293,4 +289,4 @@ def test_text_parse_matches_reference_verbatim(resp):
         parse_llm_response as ours,
     )
 
-    assert ours(resp) == _ref_text_parse(resp)
+    assert ours(resp) == _load_reference_text_parse()(resp)
